@@ -35,8 +35,9 @@ spilled blocks accumulate for its lifetime.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import lru_cache, reduce
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -49,6 +50,14 @@ from apache_kafka_clickhouse_demo_spark.sources.tables import (
 )
 from apache_kafka_clickhouse_demo_spark.functions import text as TX
 from apache_kafka_clickhouse_demo_spark.functions import vectors as V
+
+#: Bound on each memo of row-local expression trees below.  A tree is
+#: built over py4j, one JVM round trip per node (100+ ms for the URL and
+#: MinHash fronts), yet depends only on its parameters, so it is built once
+#: per (live JVM gateway, parameters) and reused by every frame and block.
+#: The gateway in the key keeps a JVM relaunched in the same process from
+#: being handed columns that lived in the old one.
+EXPR_MEMO_SIZE = 32
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -86,6 +95,59 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 # ---------------------------------------------------------------------------
 
 
+@lru_cache(maxsize=EXPR_MEMO_SIZE)
+def _minhash_columns(gateway, text_col: str, id_col: str, num_perm: int, shingle_n: int):
+    """(shingle-frame columns, exploded-shingle columns, hashed-shingle
+    columns, per-permutation min aggregates, output columns) of
+    `minhash_signatures`."""
+    sh = F.array_distinct(TX.word_shingles(TX.tokens(text_col), shingle_n))
+    min_aggs = tuple(
+        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(H.MINHASH_PRIME)).alias(f"_m{k}")
+        for k, (a, b) in enumerate(H.minhash_params(num_perm))
+    )
+    sig = F.array(*[F.col(f"_m{k}") for k in range(num_perm)])
+    return (
+        (F.col(id_col).alias("doc_id"), sh.alias("shingles")),
+        (F.col("doc_id"), F.explode_outer("shingles").alias("s")),
+        (F.col("doc_id"), H.h48_mod_p("s").alias("h")),
+        min_aggs,
+        (F.col("doc_id"), F.col("shingles"), sig.alias("sig")),
+    )
+
+
+def minhash_signature_frames(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = 12,
+    shingle_n: int = 3,
+) -> tuple[DataFrame, DataFrame]:
+    """(`minhash_signatures` frame, the persisted shingle frame it reads
+    twice) — for a caller that owns the shingle frame's lifetime and
+    unpersists it once the signatures are no longer needed."""
+    base_cols, explode_cols, hash_cols, min_aggs, out_cols = _minhash_columns(
+        SparkContext._gateway, text_col, id_col, num_perm, shingle_n
+    )
+    # the interpreted shingle construction is the dominant row-local cost —
+    # persist so the hash branch and the join branch both read it once
+    base = spread_small(docs).select(*base_cols).persist(StorageLevel.MEMORY_AND_DISK)
+
+    # explode_OUTER: a doc whose shingle array is NULL (NULL text — short
+    # docs always yield at least one shingle) must still get a signature row
+    # — the oracle computes one (all permutation minima NULL).
+    # h48_mod_p(NULL) = NULL, so the min() aggregates below yield exactly
+    # those NULLs, and the banding step turns all-NULL band slices into ''
+    # keys on both engines.
+    hashed = base.select(*explode_cols).select(*hash_cols)
+    mins = hashed.groupBy("doc_id").agg(*min_aggs)
+    # pin_wide (r9): `mins` is one row per DOCUMENT — corpus-sized — and
+    # its static estimate shrinks through the aggregate; on a wide source
+    # pin the doc_id shuffle join instead of risking a driver-collect
+    # broadcast (the failure the 100x rehearsal caught on substring_dedup)
+    sigs = base.join(pin_wide(mins, is_wide_source(docs)), "doc_id").select(*out_cols)
+    return sigs, base
+
+
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -101,40 +163,11 @@ def minhash_signatures(
     become plain codegen `min()` aggregates with map-side partial
     aggregation — the shuffle carries only (doc_id, num_perm mins) per doc
     per partition, far smaller than the data.  Same values as the
-    row-local expression form, so the oracle is unchanged.
+    row-local expression form, so the oracle is unchanged.  The shingle
+    frame stays persisted (module cache contract);
+    `minhash_signature_frames` hands it to a caller that releases it.
     """
-    toks = TX.tokens(text_col)
-    sh = F.array_distinct(TX.word_shingles(toks, shingle_n))
-    # the interpreted shingle construction is the dominant row-local cost —
-    # persist so the hash branch and the join branch both read it once
-    base = spread_small(docs).select(F.col(id_col).alias("doc_id"), sh.alias("shingles")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    # explode_OUTER: a doc whose shingle array is NULL (NULL text — short
-    # docs always yield at least one shingle) must still get a signature row
-    # — the oracle computes one (all permutation minima NULL).
-    # h48_mod_p(NULL) = NULL, so the min() aggregates below yield exactly
-    # those NULLs, and the banding step turns all-NULL band slices into ''
-    # keys on both engines.
-    hashed = base.select("doc_id", F.explode_outer("shingles").alias("s")).select(
-        "doc_id", H.h48_mod_p("s").alias("h")
-    )
-    params = H.minhash_params(num_perm)
-    mins = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(H.MINHASH_PRIME)).alias(f"_m{k}")
-            for k, (a, b) in enumerate(params)
-        ]
-    )
-    sig = F.array(*[F.col(f"_m{k}") for k in range(num_perm)])
-    # pin_wide (r9): `mins` is one row per DOCUMENT — corpus-sized — and
-    # its static estimate shrinks through the aggregate; on a wide source
-    # pin the doc_id shuffle join instead of risking a driver-collect
-    # broadcast (the failure the 100x rehearsal caught on substring_dedup)
-    return base.join(pin_wide(mins, is_wide_source(docs)), "doc_id").select(
-        "doc_id", "shingles", sig.alias("sig")
-    )
+    return minhash_signature_frames(docs, text_col, id_col, num_perm, shingle_n)[0]
 
 
 def band_keys_array(num_perm: int, bands: int) -> Column:
@@ -1378,10 +1411,19 @@ def url_parts(
     the repo-wide degenerate-doc contract (see exact_dedup): a corpus of
     extraction failures must never fold into one giant bogus duplicate
     group."""
+    return spread_small(docs).select(
+        *_url_part_columns(SparkContext._gateway, url_col, id_col, tuple(suffixes))
+    )
+
+
+@lru_cache(maxsize=EXPR_MEMO_SIZE)
+def _url_part_columns(
+    gateway, url_col: str, id_col: str, suffixes: tuple[str, ...]
+) -> tuple[Column, ...]:
     u = F.col(url_col)
     valid = u.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
     host = TX.url_host(u)
-    return spread_small(docs).select(
+    return (
         F.col(id_col).alias("doc_id"),
         F.when(valid, TX.url_normalize(u)).alias("url_norm"),
         F.when(valid, TX.registered_domain(host, suffixes)).alias("reg_domain"),

@@ -35,11 +35,15 @@ guaranteed n/C error on arbitrary domains.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from apache_kafka_clickhouse_demo_spark.operators.dedup import EXPR_MEMO_SIZE
 
 _SUMMARY_SCHEMA = T.StructType(
     [
@@ -250,11 +254,32 @@ def count_min_build(
     one groupBy((d, bucket)) count with partial aggregation — grouping
     cardinality is depth*width regardless of input rows.
     """
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
     from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
 
     if width < 1 or depth < 1:
         raise ValueError("width and depth must be >= 1")
+    has_key, cells, cell_cols = _count_min_cells(
+        SparkContext._gateway, key_col, width, depth, salt
+    )
+    return (
+        spread_small(df)
+        .filter(has_key)
+        .select(cells)
+        .groupBy(*cell_cols)
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+@lru_cache(maxsize=EXPR_MEMO_SIZE)
+def _count_min_cells(
+    gateway, key_col: str, width: int, depth: int, salt: str
+) -> tuple[Column, Column, tuple[Column, Column]]:
+    """(key-is-not-NULL filter, the `depth` hash cells of `key_col`
+    exploded as struct `c`, its (d, bucket) columns) — the one cell
+    fan-out `count_min_build` and `count_min_lookup` share, built once
+    per (live JVM gateway, parameters) — see `dedup.EXPR_MEMO_SIZE`."""
+    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
+
     k = F.col(key_col).cast("string")
     cells = F.array(
         *[
@@ -268,11 +293,9 @@ def count_min_build(
         ]
     )
     return (
-        spread_small(df)
-        .filter(k.isNotNull())
-        .select(F.explode(cells).alias("c"))
-        .groupBy(F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
+        k.isNotNull(),
+        F.explode(cells).alias("c"),
+        (F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket")),
     )
 
 
@@ -640,23 +663,10 @@ def count_min_lookup(
     row-locally and join the bounded sketch (depth*width rows,
     broadcast) — per-key cost O(depth), no window, no driver collect.
     """
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
-
-    k = F.col(key_col).cast("string")
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("d"),
-                F.pmod(
-                    H.h48(F.concat(F.lit(f"{salt}{d}:"), k)), F.lit(width)
-                ).cast("int").alias("bucket"),
-            )
-            for d in range(depth)
-        ]
+    _has_key, cells, cell_cols = _count_min_cells(
+        SparkContext._gateway, key_col, width, depth, salt
     )
-    fanned = keys.select(
-        F.col(key_col), F.explode(cells).alias("c")
-    ).select(key_col, F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))
+    fanned = keys.select(F.col(key_col), cells).select(key_col, *cell_cols)
     # sketch is depth*width rows, bounded by construction -> broadcast
     joined = fanned.join(F.broadcast(sketch), ["d", "bucket"], "left")
     return (

@@ -27,6 +27,17 @@ same commit protocol reduced to its core, with no new dependencies:
 - Readers list `_txlog/*.json` (optionally up to a pinned version — free
   snapshot/time-travel) and read exactly the files those commits name.
   Uncommitted data files and leftover staging directories are invisible.
+- Every commit records the written frame's schema (`"schema"`: the
+  `DataFrame.schema` JSON) — appends, `optimize()` replace commits and
+  `checkpoint()` summaries alike.  `read`/`read_where` hand the newest
+  schema recorded at or below the read version to `spark.read.schema`,
+  so building a read submits no Spark job (inference would open a
+  parquet footer in a job per read) and opens no file when nothing
+  matches.  The rule: columns and types are the newest recorded ones
+  (rows from files without a column read NULL there), and a partition
+  column comes last with the type it was written with, not the type
+  directory-name inference would guess.  Logs written before commits
+  carried a schema fall back to footer inference.
 
 Concurrency model: optimistic, append-only (the OCC loop every log-based
 table format uses).  On a shared filesystem/object store with atomic
@@ -64,8 +75,9 @@ import shutil
 import uuid
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _LOG_DIR = "_txlog"
 _VERSION_DIGITS = 11
@@ -112,6 +124,29 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
+class StagedFiles(list):
+    """Table-relative names of files `stage_for_append` wrote, plus the
+    schema of the frame they hold (recorded by the commit naming them)."""
+
+    def __init__(self, names: Iterable[str], schema: dict):
+        super().__init__(names)
+        self.schema = schema
+
+
+def _read_schema(payload: dict) -> T.StructType | None:
+    """The schema a read of the snapshot ending at this commit presents:
+    the recorded frame schema with the partition column moved last, where
+    Spark puts partition columns.  None when the commit recorded none."""
+    raw = payload.get("schema")
+    if raw is None:
+        return None
+    fields = T.StructType.fromJson(raw).fields
+    pcol = payload.get("partition_by")
+    return T.StructType(
+        [f for f in fields if f.name != pcol] + [f for f in fields if f.name == pcol]
+    )
+
+
 class ConcurrentWriteError(RuntimeError):
     """A compare-and-swap append found the table already advanced past the
     caller's read snapshot (see `TransactionalTable.append(cas_version=…)`)."""
@@ -149,12 +184,21 @@ class TransactionalTable:
         return max(latest, ckpt if ckpt is not None else -1)
 
     def data_files(self, up_to_version: int | None = None) -> list[str]:
+        return self._snapshot(up_to_version)[0]
+
+    def _snapshot(self, up_to_version: int | None = None) -> tuple[list[str], dict]:
+        """(data files, newest commit payload that recorded a schema — {}
+        when none did) of the snapshot at `up_to_version`."""
         ckpt, commits = self._log_entries()
         files: list[str] = []
+        described: dict = {}
         # start from the newest checkpoint at or below the requested version
         if ckpt is not None and (up_to_version is None or ckpt <= up_to_version):
             with open(os.path.join(self.log_dir, self._ckpt_name(ckpt))) as fh:
-                files.extend(json.load(fh)["files"])
+                payload = json.load(fh)
+            files.extend(payload["files"])
+            if "schema" in payload:
+                described = payload
             floor = ckpt
         else:
             floor = -1
@@ -170,7 +214,9 @@ class TransactionalTable:
                 files = list(payload["files"])
             else:
                 files.extend(payload["files"])
-        return [os.path.join(self.path, f) for f in files]
+            if "schema" in payload:
+                described = payload
+        return [os.path.join(self.path, f) for f in files], described
 
     def _txn_state(self) -> tuple[set[str], dict[str, int]]:
         """(explicit txn ids, per-writer batch watermarks).  Commits at or
@@ -302,7 +348,8 @@ class TransactionalTable:
         version = self.version()
         if version < 0:
             raise FileNotFoundError(f"nothing to checkpoint in {self.path}")
-        files = [os.path.relpath(f, self.path) for f in self.data_files(version)]
+        paths, described = self._snapshot(version)
+        files = [os.path.relpath(f, self.path) for f in paths]
         txns, marks = self._txn_state()
         if compact_txn_watermarks:
             keep: set[str] = set()
@@ -319,6 +366,8 @@ class TransactionalTable:
         pcol = self.partition_column()
         if pcol:
             summary["partition_by"] = pcol
+        if "schema" in described:
+            summary["schema"] = described["schema"]
         payload = json.dumps(summary).encode()
         ckpt_path = os.path.join(self.log_dir, self._ckpt_name(version))
         # lost the race -> an identical checkpoint already exists: fine
@@ -363,12 +412,12 @@ class TransactionalTable:
 
     # -- write path ---------------------------------------------------------
 
-    def _stage(self, df: DataFrame, partition_by: str | None) -> list[str]:
+    def _stage(self, df: DataFrame, partition_by: str | None) -> StagedFiles:
         """Write `df` to a private staging dir, move its parquet files into
         the table under unique names (preserving `<col>=<value>/` partition
         subdirectories when `partition_by` is given), and return the moved
-        files' table-relative paths.  The files are invisible to readers
-        until a commit names them."""
+        files' table-relative paths with `df`'s schema.  The files are
+        invisible to readers until a commit names them."""
         token = uuid.uuid4().hex[:12]
         staging = os.path.join(self.path, f".staging-{token}")
         try:
@@ -414,7 +463,7 @@ class TransactionalTable:
                 _fsync_dir(d)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return moved
+        return StagedFiles(moved, df.schema.jsonValue())
 
     def append(
         self,
@@ -451,7 +500,7 @@ class TransactionalTable:
 
     def stage_for_append(
         self, df: DataFrame, partition_by: str | None = None
-    ) -> list[str]:
+    ) -> StagedFiles:
         """Phase 1 of a two-phase append (r16, guide §2.6): run the Spark
         write that stages `df`'s files into the table under unique,
         commit-less (hence reader-invisible) names, and return the staged
@@ -486,7 +535,8 @@ class TransactionalTable:
         """Phase 2 of a two-phase append: publish a commit naming the
         files `stage_for_append` returned.  Pure filesystem work — no
         Spark job.  Identical publish/CAS semantics to `append` (which is
-        now stage + this)."""
+        now stage + this).  The staged frame's schema goes into the
+        commit, so reads of it need no schema inference."""
         moved = staged
         commit: dict = {"files": sorted(moved)}
         if partition_by:
@@ -495,6 +545,9 @@ class TransactionalTable:
             commit["partition_by"] = partition_by
         if txn is not None:
             commit["txn"] = txn
+        schema = getattr(staged, "schema", None)
+        if schema is not None:
+            commit["schema"] = schema
         payload = json.dumps(commit).encode()
         if cas_version is not None:
             version = cas_version + 1
@@ -653,7 +706,11 @@ class TransactionalTable:
             else:
                 df = df.coalesce(max(1, target_files))
             moved = self._stage(df, partition_by)
-            replace: dict = {"files": sorted(moved), "replaces": snapshot}
+            replace: dict = {
+                "files": sorted(moved),
+                "replaces": snapshot,
+                "schema": moved.schema,
+            }
             if partition_by:
                 replace["partition_by"] = partition_by  # layout survives prune_log
             payload = json.dumps(replace).encode()
@@ -730,16 +787,22 @@ class TransactionalTable:
 
     # -- read path ----------------------------------------------------------
 
+    def _reader(self, spark: SparkSession, described: dict) -> DataFrameReader:
+        reader = spark.read.option("basePath", self.path)
+        schema = _read_schema(described)
+        return reader if schema is None else reader.schema(schema)
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Snapshot read: exactly the files committed up to `version`
-        (latest when None).  An empty table needs at least one commit to
-        infer a schema from — callers create tables by appending.
-        `basePath` keeps Hive-style partition columns visible when the
-        table was written with `partition_by` (harmless for flat tables)."""
-        files = self.data_files(version)
+        (latest when None), under the newest recorded schema (module
+        docstring) — building the read runs no Spark job.  An empty table
+        has no schema — callers create tables by appending.  `basePath`
+        keeps Hive-style partition columns visible when the table was
+        written with `partition_by` (harmless for flat tables)."""
+        files, described = self._snapshot(version)
         if not files:
             raise FileNotFoundError(f"no committed data in {self.path}")
-        return spark.read.option("basePath", self.path).parquet(*files)
+        return self._reader(spark, described).parquet(*files)
 
     def read_where(
         self,
@@ -756,8 +819,9 @@ class TransactionalTable:
         the read the streaming near-dup store does per block: values =
         the block's band-key shards, files read = colliding buckets only.
 
-        Returns an empty frame (with the table's schema) when no committed
-        file matches; raises FileNotFoundError only when the table has no
+        Returns an empty frame (with the table's schema, built from the
+        recorded schema without opening a file) when no committed file
+        matches; raises FileNotFoundError only when the table has no
         commits at all (indistinguishable from a missing table).
 
         Values are matched against the directory names Spark actually
@@ -766,7 +830,7 @@ class TransactionalTable:
         f-string would silently return the empty frame for any value
         Spark escapes, and a dedup-store caller would then dedupe
         against nothing (code-review r6)."""
-        files = self.data_files(version)
+        files, described = self._snapshot(version)
         if not files:
             raise FileNotFoundError(f"no committed data in {self.path}")
         # match TABLE-RELATIVE paths: a table whose own root happens to
@@ -780,13 +844,14 @@ class TransactionalTable:
             for f in files
             if os.path.relpath(f, self.path).startswith(prefixes)
         ]
-        if not picked:
-            # schema-only empty frame: ONE committed file suffices — a
-            # reader over the whole list costs O(table) for nothing
-            return (
-                spark.read.option("basePath", self.path).parquet(files[0]).limit(0)
-            )
-        return spark.read.option("basePath", self.path).parquet(*picked)
+        reader = self._reader(spark, described)
+        if picked:
+            return reader.parquet(*picked)
+        if "schema" in described:
+            return reader.parquet()  # no paths: the empty frame of that schema
+        # unrecorded schema: ONE committed file's footer suffices — a
+        # reader over the whole list costs O(table) for nothing
+        return reader.parquet(files[0]).limit(0)
 
 
 #: Characters Hive/Spark escape in partition-directory names

@@ -20,14 +20,17 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable, Iterator
+from functools import lru_cache
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from apache_kafka_clickhouse_demo_spark.functions import text as TX_FN
+from apache_kafka_clickhouse_demo_spark.operators.dedup import EXPR_MEMO_SIZE
 
 
 def streaming_dedup(
@@ -230,7 +233,10 @@ class _NearDupStreamWriter:
         #: which is stable across restarts of the SAME stream and distinct
         #: for a new one (code-review r6).
         self.writer_id = writer_id
-        self.prepare = prepare  # block -> (id, payload, bkeys array<string>)
+        #: (block, owned) -> (id, payload, bkeys array<string>); frames it
+        #: persists go into `owned`, which `process` unpersists when the
+        #: block ends
+        self.prepare = prepare
         self.verify = verify  # (payload_col_a, payload_col_b) -> bool Column
         self.band_shards = band_shards
         self.id_shards = id_shards
@@ -330,11 +336,13 @@ class _NearDupStreamWriter:
         if self.store.txn_committed(txn) and self.out.txn_committed(txn):
             return  # fully-committed replay: no-op, no jobs
 
-        sigs_b = self.prepare(block).persist()
+        owned: list[DataFrame] = []
+        sigs_b = self.prepare(block, owned).persist()
         # cand is persisted mid-chain (stashed on self._cand_scratch);
-        # unpersist BOTH in the outer finally so an append failure or
-        # candidate-chain raise doesn't leak cached blocks into the retry
-        # (which re-persists fresh copies).
+        # unpersist it, the signatures and prepare's own frames in the
+        # outer finally so an append failure or candidate-chain raise
+        # doesn't leak cached blocks into the retry (which re-persists
+        # fresh copies).
         self._cand_scratch = None
         try:
             self._process_inner(block, batch_id, txn, sigs_b)
@@ -344,6 +352,8 @@ class _NearDupStreamWriter:
                 cand.unpersist()
                 self._cand_scratch = None
             sigs_b.unpersist()
+            for df in owned:
+                df.unpersist()
         if self.compact_every and (batch_id + 1) % self.compact_every == 0:
             self.maintain()
 
@@ -517,6 +527,26 @@ class _NearDupStreamWriter:
             self.out.commit_staged(staged_out, txn=txn)
 
 
+@lru_cache(maxsize=EXPR_MEMO_SIZE)
+def _minhash_prepare_columns(gateway, num_perm: int, bands: int) -> tuple:
+    """The minhash stream's (id, payload, bkeys) columns over a signature
+    frame, built once per (live JVM gateway, parameters) — see
+    `dedup.EXPR_MEMO_SIZE`."""
+    from apache_kafka_clickhouse_demo_spark.operators.dedup import band_keys_array
+
+    # "band:key" strings collide iff (band, band_key) pairs collide —
+    # identical bucketing to the batch band_key_rows
+    bkeys = F.transform(
+        band_keys_array(num_perm, bands),
+        lambda k, i: F.concat(i.cast("string"), F.lit(":"), k),
+    )
+    return (
+        F.col("doc_id").alias("id"),
+        F.col("shingles").alias("payload"),
+        bkeys.alias("bkeys"),
+    )
+
+
 def minhash_stream_writer(
     spark,
     out_dir: str,
@@ -548,23 +578,17 @@ def minhash_stream_writer(
         band_shards = shards_for_store(expected_corpus_rows * bands)
         id_shards = shards_for_store(expected_corpus_rows)
     from apache_kafka_clickhouse_demo_spark.operators.dedup import (
-        band_keys_array,
         jaccard_of,
-        minhash_signatures,
+        minhash_signature_frames,
     )
 
-    def prepare(block: DataFrame) -> DataFrame:
-        sigs = minhash_signatures(block, text_col, id_col, num_perm, shingle_n)
-        # "band:key" strings collide iff (band, band_key) pairs collide —
-        # identical bucketing to the batch band_key_rows
-        bkeys = F.transform(
-            band_keys_array(num_perm, bands),
-            lambda k, i: F.concat(i.cast("string"), F.lit(":"), k),
+    def prepare(block: DataFrame, owned: list[DataFrame]) -> DataFrame:
+        sigs, shingled = minhash_signature_frames(
+            block, text_col, id_col, num_perm, shingle_n
         )
+        owned.append(shingled)
         return sigs.select(
-            F.col("doc_id").alias("id"),
-            F.col("shingles").alias("payload"),
-            bkeys.alias("bkeys"),
+            *_minhash_prepare_columns(SparkContext._gateway, num_perm, bands)
         )
 
     return _NearDupStreamWriter(
@@ -719,7 +743,7 @@ def embedding_stream_writer(
         ]
     )
 
-    def prepare(block: DataFrame) -> DataFrame:
+    def prepare(block: DataFrame, owned: list[DataFrame]) -> DataFrame:
         bkeys = F.transform(
             buckets_expr,
             lambda b, t: F.concat(t.cast("string"), F.lit(":"), b.cast("string")),

@@ -2330,3 +2330,63 @@ def test_token_cap_stream_matches_batch_on_id_ordered_feed(spark, tmp_path):
         for r in domain_token_cap(_tok_docs_df(spark, rows), budget=25).collect()
     }
     assert streamed == batch and streamed
+
+
+def test_minhash_stream_blocks_leave_no_persisted_data(spark, tmp_path):
+    """No operator leaks cached data: the shingle frame each block's
+    signatures read twice is released with the block, so the session's
+    persisted RDD count is unchanged after several blocks."""
+    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
+        minhash_stream_writer,
+    )
+
+    writer = minhash_stream_writer(
+        spark, out_dir=str(tmp_path / "kept"), store_dir=str(tmp_path / "store")
+    )
+    texts = _distinct_texts(30, "leak")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for b in range(3):
+        rows = [(b * 10 + i, texts[b * 10 + i]) for i in range(10)]
+        # a near-dup of an earlier block's doc, so the candidate chain runs
+        rows.append((100 + b, texts[max(b * 10 - 1, 0)] + " again"))
+        writer.process(_docs_df(spark, rows), b)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    kept = {r["doc_id"] for r in writer.out.read(spark).collect()}
+    assert set(range(30)) <= kept and not {100, 101, 102} & kept
+
+
+@pytest.mark.parametrize("capacity", [4, 64])
+def test_topk_driver_merge_pre_reduce_is_bit_identical(spark, tmp_path, capacity):
+    """`DRIVER_MERGE_MAX_TASKS`: a block wider than the threshold is
+    re-summed per value before the driver merge.  Forcing the threshold
+    below and then above the blocks' partition count must publish
+    bit-identical summaries, in the trimmed regime (capacity 4) and the
+    exact one (capacity 64)."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
+    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
+        topk_stream_writer,
+    )
+
+    blocks = []
+    for i in range(3):
+        rows = [("hot",)] * 40 + [(f"v{(i * 7 + j) % 23}",) for j in range(60)]
+        blocks.append(spark.createDataFrame(rows, "v string").repartition(6))
+    assert blocks[0].rdd.getNumPartitions() == 6
+
+    published = {}
+    for threshold in (1, 100):  # below, then above, the 6 block tasks
+        store = str(tmp_path / f"s{threshold}")
+        w = topk_stream_writer(spark, store, "v", capacity=capacity, writer_id="t")
+        w.DRIVER_MERGE_MAX_TASKS = threshold
+        for i, block in enumerate(blocks):
+            w.process(block, i)
+        published[threshold] = (
+            sorted(
+                (r["gen"], r["value"] or "", r["count_lb"], r["trim_err"])
+                for r in TransactionalTable(store).read(spark).collect()
+            ),
+            w._mem,
+        )
+    assert published[1] == published[100]
+    trim_err = published[1][1][1]
+    assert (trim_err == 0) == (capacity == 64)

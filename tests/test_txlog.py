@@ -554,9 +554,9 @@ def test_optimize_keep_where_retention_rewrite(spark, tmp_path):
 
 def test_append_with_added_column_reads_merged_schema(spark, tmp_path):
     """Schema evolution pin (ALTER TABLE ADD COLUMN analogue): an append
-    carrying a NEW column must not corrupt the table — a snapshot read
-    with mergeSchema surfaces the union schema with NULLs for old rows,
-    and the plain read keeps working on the original columns."""
+    carrying a NEW column must not corrupt the table — the plain snapshot
+    read shows the newest recorded schema, with NULLs for old rows, and a
+    read pinned below the append keeps the schema of its own snapshot."""
     from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
     t = TransactionalTable(str(tmp_path / "t"))
@@ -565,16 +565,118 @@ def test_append_with_added_column_reads_merged_schema(spark, tmp_path):
         spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double")
     )
 
-    files = t.data_files()
-    merged = (
-        spark.read.option("mergeSchema", "true")
-        .option("basePath", t.path)
-        .parquet(*files)
-    )
-    rows = {r["id"]: (r["v"], r["score"]) for r in merged.collect()}
+    read = t.read(spark)
+    assert read.columns == ["id", "v", "score"]
+    rows = {r["id"]: (r["v"], r["score"]) for r in read.collect()}
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
-    # plain snapshot read still answers on the common columns
-    assert {r["id"] for r in t.read(spark).select("id").collect()} == {1, 2}
+    assert t.read(spark, version=0).columns == ["id", "v"]
+
+
+def _jobs_submitted(spark, build) -> tuple[object, int]:
+    """(build(), Spark jobs submitted while building it)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = build()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def _partitioned(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id"),
+        (F.col("id") % 3).cast("string").alias("shard"),
+        (F.col("id") * 2).alias("v"),
+    )
+
+
+def test_recorded_schema_reads_submit_no_jobs(spark, tmp_path):
+    """Every commit records its frame's schema, so building `read()` and
+    `read_where()` runs no schema-inference job; the partition column
+    reads back last, with the type it was written with (a string of
+    digits stays a string, where directory inference gave int)."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    t.append(_partitioned(spark, 0, 12), partition_by="shard")
+    t.append(_partitioned(spark, 12, 20), partition_by="shard")
+
+    full, jobs = _jobs_submitted(spark, lambda: t.read(spark))
+    assert jobs == 0
+    assert full.schema.simpleString() == "struct<id:bigint,v:bigint,shard:string>"
+    assert full.count() == 20
+
+    pruned, jobs = _jobs_submitted(spark, lambda: t.read_where(spark, "shard", ["1"]))
+    assert jobs == 0
+    assert pruned.schema == full.schema
+    assert sorted(r["id"] for r in pruned.collect()) == [
+        i for i in range(20) if i % 3 == 1
+    ]
+
+
+def test_read_where_no_match_opens_no_file(spark, tmp_path):
+    """No matching partition: the empty frame comes straight from the
+    recorded schema — it still answers after every data file is gone."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    t.append(_partitioned(spark, 0, 6), partition_by="shard")
+    schema = t.read(spark).schema
+    for f in t.data_files():
+        os.remove(f)
+    empty, jobs = _jobs_submitted(spark, lambda: t.read_where(spark, "shard", ["9"]))
+    assert jobs == 0
+    assert empty.schema == schema
+    assert empty.collect() == []
+
+
+def test_commit_without_schema_reads_through_inference(spark, tmp_path):
+    """A log written before commits recorded schemas (a hand-written
+    commit naming a plain parquet file) still reads, by footer
+    inference, for both read paths."""
+    import json
+
+    t = TransactionalTable(str(tmp_path / "t"))
+    src = str(tmp_path / "src")
+    _partitioned(spark, 0, 6).write.partitionBy("shard").parquet(src)
+    os.makedirs(t.log_dir)
+    files = []
+    for dirpath, _d, names in os.walk(src):
+        for n in names:
+            if n.endswith(".parquet"):
+                rel = os.path.join(os.path.relpath(dirpath, src), n)
+                os.makedirs(os.path.dirname(os.path.join(t.path, rel)), exist_ok=True)
+                os.rename(os.path.join(dirpath, n), os.path.join(t.path, rel))
+                files.append(rel)
+    with open(os.path.join(t.log_dir, "00000000000.json"), "w") as fh:
+        json.dump({"files": files, "partition_by": "shard"}, fh)
+
+    read = t.read(spark)
+    assert read.schema.simpleString() == "struct<id:bigint,v:bigint,shard:int>"
+    assert read.count() == 6
+    assert sorted(r["id"] for r in t.read_where(spark, "shard", [2]).collect()) == [2, 5]
+    assert t.read_where(spark, "shard", [7]).collect() == []
+    # the next append records a schema, and reads then use it
+    t.append(_partitioned(spark, 6, 9), partition_by="shard")
+    assert t.read(spark).schema["shard"].dataType.simpleString() == "string"
+
+
+def test_checkpointed_and_optimized_tables_read_without_inference(spark, tmp_path):
+    """checkpoint() carries the schema into its summary, so a table whose
+    commits were pruned still reads with no job; an optimize() replace
+    commit records the schema of the rewritten frame."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    t.append(_partitioned(spark, 0, 9), partition_by="shard")
+    t.append(_partitioned(spark, 9, 15), partition_by="shard")
+    t.checkpoint()
+    assert t.prune_log()
+    pruned, jobs = _jobs_submitted(spark, lambda: t.read(spark))
+    assert jobs == 0
+    assert pruned.schema.simpleString() == "struct<id:bigint,v:bigint,shard:string>"
+    assert pruned.count() == 15
+
+    o = TransactionalTable(str(tmp_path / "o"))
+    o.append(_partitioned(spark, 0, 9), partition_by="shard")
+    o.append(_partitioned(spark, 9, 15), partition_by="shard")
+    o.optimize(spark)
+    optimized, jobs = _jobs_submitted(spark, lambda: o.read_where(spark, "shard", ["0"]))
+    assert jobs == 0
+    assert optimized.schema == pruned.schema
+    assert sorted(r["id"] for r in optimized.collect()) == [0, 3, 6, 9, 12]
 
 
 def test_txn_version_locates_commit(spark, tmp_path):
